@@ -108,13 +108,14 @@ class EngineAPI:
         with self._lock:
             if doc_id in self.uploads:
                 return self.uploads[doc_id]["chunks"]
+        # no existence probe: the chunker emits at least one row for
+        # every present document (empty or NULL text packs to [""]), so
+        # an empty result is exactly "not found"
         doc = self.documents.filter(F.col("doc_id") == doc_id)
-        if not doc.take(1):
-            return None
         out = chunking.chunk_metadata_enrich(
             chunking.chunk_sentence_exact(doc, 500), "sentence"
         )
-        return [r.asDict() for r in out.collect()]
+        return [r.asDict() for r in out.collect()] or None
 
     def search(self, query: str, k: int = 10) -> list:
         from data_pipeline2_spark.operators.embedding import hash_embed_one

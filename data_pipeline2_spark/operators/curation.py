@@ -98,7 +98,7 @@ def decontaminate_semantic(
     ).crossJoin(F.broadcast(ev)).select(
         "vec_id",
         "__eid",
-        F.round(cosine_similarity(F.col("__v"), F.col("__evec")), 6).alias(
+        F.round(cosine_similarity("__v", "__evec"), 6).alias(
             "__sim"
         ),
     )

@@ -948,7 +948,7 @@ def dedup_near_embedding(
 
     # zero-norm (degenerate) vectors normalize to NULL and drop out of
     # the pair scan — and the guard avoids ANSI divide-by-zero errors
-    norm = l2_norm(F.col(vec_col))
+    norm = l2_norm(vec_col)
     normed = F.when(
         norm > 0, F.transform(F.col(vec_col), lambda x: x.cast("double") / norm)
     )
@@ -978,7 +978,7 @@ def dedup_near_embedding(
         .select(
             "id_a",
             "id_b",
-            F.round(dot(F.col("na"), F.col("nb")), 6).alias("cos"),
+            F.round(dot("na", "nb"), 6).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -1001,11 +1001,8 @@ def _near_embedding_lsh(
     (8B + n_planes bits) per vector — move through the candidate join;
     full vectors are joined back ONLY for the (tiny) candidate pair set.
     """
-    from data_pipeline2_spark.functions.vectors import dot
-    from data_pipeline2_spark.operators.similarity import (
-        _hyperplanes,
-        signature_col,
-    )
+    from data_pipeline2_spark.functions.vectors import dot, signature_col
+    from data_pipeline2_spark.operators.similarity import _hyperplanes
 
     # dim mismatch must fail LOUDLY: zip_with pads the shorter side with
     # nulls, every dot folds to NULL, and all vectors would share one
@@ -1014,12 +1011,10 @@ def _near_embedding_lsh(
     # NULL embeddings pass the guard (they drop out in verification,
     # same as the exact paths) — only a present-but-wrong-width vector
     # is a configuration error.
-    vec = F.when(
-        F.assert_true(
-            F.col(vec_col).isNull() | (F.size(F.col(vec_col)) == dim),
-            f"dedup_near_embedding: embedding dim != configured dim={dim}",
-        ).isNull(),
-        F.col(vec_col),
+    vec = (
+        f"CASE WHEN assert_true({vec_col} IS NULL OR size({vec_col}) = {dim}, "
+        f"'dedup_near_embedding: embedding dim != configured dim={dim}') "
+        f"IS NULL THEN {vec_col} END"
     )
     # all tables' signatures in ONE projection + inline explode: the
     # corpus is scanned once for candidate generation, not n_tables times
@@ -1077,7 +1072,7 @@ def _near_embedding_lsh(
         .select(
             "id_a",
             "id_b",
-            F.round(dot(F.col("na"), F.col("nb")), 6).alias("cos"),
+            F.round(dot("na", "nb"), 6).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -1627,7 +1622,7 @@ def semdedup(
         F.col("_id").alias("xb"), F.col("_v").alias("vb"),
         "cluster", F.col("dist").alias("db"),
     )
-    sim = F.round(cosine_similarity(F.col("va"), F.col("vb")), 6)
+    sim = F.round(cosine_similarity("va", "vb"), 6)
     dropped = (
         a.join(b, "cluster")
         .filter(F.col("xa") != F.col("xb"))

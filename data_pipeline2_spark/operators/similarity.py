@@ -29,8 +29,8 @@ from pyspark.sql.window import Window
 
 from data_pipeline2_spark.functions.vectors import (
     cosine_similarity,
-    dot,
     query_vector_lit,
+    signature_col,
 )
 
 SCORE_ROUND = 6  # rounding makes double cosine hash-stable across engines
@@ -69,10 +69,10 @@ def knn_cosine(
             F.col(query_vec.columns[0]).alias("__qv")
         ).limit(1)
         df = df.crossJoin(F.broadcast(qdf))
-        qcol = F.col("__qv")
+        q = "__qv"
     else:
-        qcol = query_vector_lit(query_vec)
-    score = F.round(cosine_similarity(F.col(vec_col), qcol), SCORE_ROUND)
+        q = query_vector_lit(query_vec)
+    score = F.round(cosine_similarity(vec_col, q), SCORE_ROUND)
     return (
         df.select(F.col(id_col), score.alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
@@ -102,7 +102,7 @@ def knn_batch(
         F.col(qid_col),
         F.col(id_col),
         F.round(
-            cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
+            cosine_similarity(vec_col, qvec_col), SCORE_ROUND
         ).alias("score"),
     )
     w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
@@ -140,17 +140,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
             v.append(state / float(1 << 30) - 1.0)
         planes.append(v)
     return planes
-
-
-def signature_col(vec_col: Column, planes) -> Column:
-    """Sign-bit signature string for one vector under the hyperplanes."""
-    bits = [
-        F.when(dot(vec_col, query_vector_lit(p)) >= 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
-        for p in planes
-    ]
-    return F.concat(*bits)
 
 
 def _kmeans_fit_sample(
@@ -276,7 +265,7 @@ def knn_batch_ivf(
         F.col(qid_col),
         F.col(id_col),
         F.round(
-            cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
+            cosine_similarity(vec_col, qvec_col), SCORE_ROUND
         ).alias("score"),
     )
     w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
@@ -309,13 +298,13 @@ def knn_batch_lsh(
     IVF/LSH scale path mandated by the north star.
     """
     planes = _hyperplanes(dim, n_planes, seed)
-    e = embeddings.withColumn("__sig", signature_col(F.col(vec_col), planes))
-    q = queries.withColumn("__sig", signature_col(F.col(qvec_col), planes))
+    e = embeddings.withColumn("__sig", signature_col(vec_col, planes))
+    q = queries.withColumn("__sig", signature_col(qvec_col, planes))
     scored = e.join(F.broadcast(q), "__sig").select(
         F.col(qid_col),
         F.col(id_col),
         F.round(
-            cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
+            cosine_similarity(vec_col, qvec_col), SCORE_ROUND
         ).alias("score"),
     )
     w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
@@ -467,7 +456,7 @@ def centroid_assign(
         "vec_id",
         "label",
         "pred_label",
-        F.round(cosine_similarity(F.col("_v"), F.col("cvec")), SCORE_ROUND).alias(
+        F.round(cosine_similarity("_v", "cvec"), SCORE_ROUND).alias(
             "score"
         ),
     )
@@ -627,7 +616,7 @@ def hard_negatives(
             F.col(id_col),
             F.col(label_col).alias("neg_label"),
             F.round(
-                cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
+                cosine_similarity(vec_col, qvec_col), SCORE_ROUND
             ).alias("score"),
         )
     )
@@ -922,7 +911,7 @@ def knn_batch_ivf_exact(
             F.col(qid_col),
             F.col(id_col),
             F.round(
-                cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
+                cosine_similarity(vec_col, qvec_col), SCORE_ROUND
             ).alias("score"),
         )
     )
@@ -1152,7 +1141,7 @@ def _exact_rerank(
             "qid",
             "vec_id",
             F.round(
-                cosine_similarity(F.col("__vec"), F.col("__qv")), SCORE_ROUND
+                cosine_similarity("__vec", "__qv"), SCORE_ROUND
             ).alias("score"),
         )
     )
@@ -1930,7 +1919,7 @@ def retrieval_eval(
             F.col(id_col),
             (F.col(label_col) == F.col("qlabel")).cast("int").alias("rel"),
             F.round(
-                cosine_similarity(F.col(vec_col), F.col("qvec")), SCORE_ROUND
+                cosine_similarity(vec_col, "qvec"), SCORE_ROUND
             ).alias("score"),
         )
     )
@@ -2298,7 +2287,7 @@ def retrieval_ndcg(
             F.col(id_col),
             rel.alias("rel"),
             F.round(
-                cosine_similarity(F.col(vec_col), F.col("qvec")), SCORE_ROUND
+                cosine_similarity(vec_col, "qvec"), SCORE_ROUND
             ).alias("score"),
         )
     )

@@ -235,14 +235,9 @@ def _probe_cells(spark, cents, qvec, nprobe: int) -> list:
         [(int(c), [float(x) for x in v]) for c, v in cents],
         "cid int, cvec array<double>",
     )
-    d = F.aggregate(
-        F.zip_with(
-            query_vector_lit(qvec),
-            F.col("cvec"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
+    d = F.expr(
+        f"aggregate(zip_with({query_vector_lit(qvec)}, cvec, "
+        "(x, y) -> (x - y) * (x - y)), 0D, (a, x) -> a + x)"
     )
     rows = (
         cdf.select("cid", F.round(d, 6).alias("d"))
@@ -333,7 +328,7 @@ def q_streaming_search_e2e(spark, sf_dir):
         "vec_id",
         "cell",
         F.round(
-            cosine_similarity(F.col("embedding"), query_vector_lit(qv)), 6
+            cosine_similarity("embedding", query_vector_lit(qv)), 6
         ).alias("score"),
     )
     w = Window.orderBy(F.desc("score"), F.col("vec_id"))

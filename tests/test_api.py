@@ -50,6 +50,8 @@ def test_document_lookup_and_status(base_url):
     assert code == 200 and st == {"doc_id": 7, "status": "completed"}
     code, _ = _get(f"{base_url}/api/v1/documents/99999999/status")
     assert code == 404
+    code, _ = _get(f"{base_url}/api/v1/documents/99999999/chunks")
+    assert code == 404
 
 
 def test_upload_then_fetch_chunks(base_url):
@@ -63,6 +65,11 @@ def test_upload_then_fetch_chunks(base_url):
     assert code == 200
     contents = " ".join(c["content"] for c in chunks["chunks"])
     assert "First sentence" in contents
+    # blank text still packs to exactly one (empty) chunk
+    code, resp = _post(f"{base_url}/api/v1/documents/?filename=blank.txt", b"   ")
+    assert code == 200 and resp["n_chunks"] == 1
+    code, chunks = _get(f"{base_url}/api/v1/documents/{resp['doc_id']}/chunks")
+    assert code == 200 and len(chunks["chunks"]) == 1
 
 
 def test_search_endpoint(base_url):
@@ -76,6 +83,51 @@ def test_search_endpoint(base_url):
     assert len(results) == 5
     scores = [r["score"] for r in results]
     assert scores == sorted(scores, reverse=True)
+
+
+@pytest.mark.parametrize(
+    "query,k",
+    [("spark query engine", 5), ("storage", 10), ("a b c d", 3),
+     ("unicode ünïcødé query", 1000)],  # 1000 > the 500-vector corpus
+)
+def test_search_matches_knn_cosine(base_url, spark, query, k):
+    from data_pipeline2_spark.operators.embedding import hash_embed_one
+    from data_pipeline2_spark.operators.similarity import knn_cosine
+    from data_pipeline2_spark.sources.parquet import load_table
+
+    code, resp = _post(
+        f"{base_url}/api/v1/documents/search",
+        json.dumps({"query": query, "k": k}).encode(),
+        {"Content-Type": "application/json"},
+    )
+    assert code == 200
+    got = [(r["vec_id"], r["score"]) for r in resp["results"]]
+    emb = load_table(spark, SF, "embeddings")
+    want = [
+        (r["vec_id"], r["score"])
+        for r in knn_cosine(emb, hash_embed_one(query), k).collect()
+    ]
+    assert got == want
+    assert len(got) == min(k, emb.count())
+
+
+def test_corpus_chunks_without_existence_probe(spark):
+    """get_chunks reads "not found" off an empty chunk result, so every
+    present corpus document, even with empty or NULL text, must chunk
+    to at least one row."""
+    from data_pipeline2_spark.api import EngineAPI
+
+    engine = EngineAPI(spark, SF)
+    engine.documents = spark.createDataFrame(
+        [(1, ""), (2, None), (3, "One sentence. Another one.")],
+        "doc_id long, text string",
+    )
+    for doc_id in (1, 2):
+        chunks = engine.get_chunks(doc_id)
+        assert chunks is not None and len(chunks) == 1
+        assert chunks[0]["content"] == "" and chunks[0]["total_chunks"] == 1
+    assert [c["doc_id"] for c in engine.get_chunks(3)] == [3]
+    assert engine.get_chunks(4) is None
 
 
 def test_error_paths(base_url):

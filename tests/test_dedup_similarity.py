@@ -801,7 +801,7 @@ def test_ann_recall_stats_gates_correctly(spark):
 
     scored = emb.crossJoin(F.broadcast(q)).select(
         "qid", "vec_id",
-        similarity.cosine_similarity(F.col("embedding"), F.col("qvec")).alias("s"),
+        similarity.cosine_similarity("embedding", "qvec").alias("s"),
     )
     w = Window.partitionBy("qid").orderBy(F.asc("s"), F.col("vec_id"))
     worst = (
